@@ -1101,6 +1101,11 @@ def prefix_filter_pairs(
     Output: (id_a, id_b, inter_size, union_size, jaccard), id_a < id_b.
     """
     tid, tok = F.col(id_col), F.col(token_col)
+    # a NULL token belongs to no set (collect_set and the equi-joins
+    # skip it on the string path); dropping it up front keeps the probe
+    # honest too — countDistinct skips NULL but xxhash64(NULL) = 42
+    # counts, which would turn the hash path off for nothing
+    tokens = tokens.filter(tok.isNotNull())
     probe = tokens.agg(
         F.countDistinct(tok).alias("__nt"),
         F.countDistinct(F.xxhash64(tok)).alias("__nh"),

@@ -339,8 +339,10 @@ def logistic_gate(
             f"{sorted(reserved)}; input already has {sorted(clash)}"
         )
     spark = df.sparkSession
-    # spark.range(1).select(lits) keeps the weight row JVM-side — a
-    # createDataFrame([...]) would plan as a Python-backed ExistingRDD.
+    # spark.range(1).select(lits) keeps the weight row in the plan as
+    # literals. Rows that only exist as Python values go through
+    # sources.io.local_frame (Arrow, JVM-scanned); a bare
+    # createDataFrame([...]) would plan as a Python-backed RDD.
     wdf = spark.range(1).select(
         F.lit(float(intercept)).cast("double").alias("__b"),
         *[

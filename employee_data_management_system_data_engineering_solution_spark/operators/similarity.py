@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..sources.io import fan_out
+from ..sources.io import fan_out, local_frame
 
 
 def _as_double(v: Column) -> Column:
@@ -487,8 +487,8 @@ def kmeans_iterate(
     # seed vectors (on 0-based contiguous ids this is 0..k-1, matching
     # the SQL oracle's `vec_id < k` seed)
     pivot_ids = [int(r[0]) for r in seed_rows]
-    pivots = spark.createDataFrame(
-        [(int(r[0]), [float(x) for x in r[1]]) for r in seed_rows], schema
+    pivots = local_frame(
+        spark, [(int(r[0]), [float(x) for x in r[1]]) for r in seed_rows], schema
     )
     for _ in range(iters):
         assigned = assign_clusters(corpus, pivots, id_col, vec_col)
@@ -512,7 +512,7 @@ def kmeans_iterate(
             far = _farthest_vectors(corpus, surviving, len(missing), id_col, vec_col)
             for cid, row in zip(missing, far):
                 cents[cid] = [round(float(x), round_digits) for x in row[1]]
-        pivots = spark.createDataFrame([(cid, cents[cid]) for cid in pivot_ids], schema)
+        pivots = local_frame(spark, [(cid, cents[cid]) for cid in pivot_ids], schema)
     return pivots
 
 

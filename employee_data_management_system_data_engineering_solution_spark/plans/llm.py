@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..functions import text as tx
 from ..operators import dedup, modeleval, multimodal, quality, similarity
 from ..operators.graph import connected_components
-from ..sources.io import read_table, table_fingerprint, unpersist_checkpoint
+from ..sources.io import local_frame, read_table, table_fingerprint, unpersist_checkpoint
 from ..streaming.strikes import run_strike_stream
 from .registry import REGISTRY, register
 
@@ -639,7 +639,8 @@ def gate_training_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = _gd_rounds(feats)
     feats.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "step INT, b0 DOUBLE, w1 DOUBLE, w2 DOUBLE, w3 DOUBLE, w4 DOUBLE,"
         " loss DOUBLE, acc DOUBLE",
@@ -4653,8 +4654,8 @@ def ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("cn") - 1).alias("c2"),
         )
     )
-    spec = spark.createDataFrame(
-        list(_ANN_COST_SPEC), "method string, np int, coarse_b int, cap int"
+    spec = local_frame(
+        spark, list(_ANN_COST_SPEC), "method string, np int, coarse_b int, cap int"
     )
     cc = (
         F.when(F.col("np") == 0, F.col("n") - 1)
@@ -6966,7 +6967,8 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     replace() exactly the greedy BPE merge. The training run itself is
     session-memoized (``_bpe_merges``) and shared with the X175 encoder
     (``bpe_encode_stats``)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _bpe_merges(spark, sf_dir),
         "rank INT, pair_a STRING, pair_b STRING, merged STRING,"
         " weighted_count LONG",
@@ -7283,7 +7285,8 @@ def bpe_merge_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab = prev.select(spine.alias("spine"), "wc").localCheckpoint()
         prev.unpersist()
     vocab.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "round INT, slot INT, pair_a STRING, pair_b STRING, merged STRING,"
         " weighted_count LONG",
@@ -8291,7 +8294,8 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cands, sim_by_q.get(qid, {})
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "query_id LONG, mmr_rank INT, neighbor_id LONG, "
         "relevance DOUBLE, mmr_score DOUBLE",

@@ -16,20 +16,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     """Round-robin repartition of a COMPACT input ahead of a
     compute-bound narrow map (n-gram explode, signature hashing, vector
@@ -208,18 +194,46 @@ _ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 def arrow_batch_defaults(spark: SparkSession) -> None:
     """Apply the engine's Arrow batch-size default to ``spark`` unless
-    the session carries an explicit non-default value (a deployment
-    that tuned the knob keeps its setting). Called at the entry of
-    every Python-boundary operator so the optimization is a property
+    the key is set on the session: any explicit value, one equal to
+    Spark's own 10000 default included, is a deployment's choice and
+    is kept (``conf.get(key, None)`` is None only while the key is
+    unset). Called at the entry of every Python-boundary operator so the optimization is a property
     of the ENGINE, not of whichever harness built the session (r16
     verdict item 2 — previously only bench.py's session had it, and
     any other deployment ran 10k-row batches). Runtime-settable SQL
     conf; idempotent."""
     try:
-        if spark.conf.get(_ARROW_BATCH_CONF, "10000") == "10000":
+        if spark.conf.get(_ARROW_BATCH_CONF, None) is None:
             spark.conf.set(_ARROW_BATCH_CONF, str(ARROW_BATCH_ROWS))
     except Exception:
         pass  # a read-only/conf-locked session keeps its defaults
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A frame over driver-resident rows that the JVM can scan on its
+    own: ``rows`` (a sequence of tuples, or a ``pyarrow.Table``) become
+    one Arrow table typed by ``schema`` (a StructType or DDL string),
+    which ``createDataFrame`` ships to the JVM as Arrow batches.
+
+    Every frame the engine builds from Python values goes through here.
+    ``createDataFrame(list)`` plans as a ``PythonRDD`` scan, so each
+    consumer of such a frame forks Python workers only to unpickle the
+    rows; the Arrow path plans as a plain parallelized collection.
+    Values are converted by Arrow's rules (an int fits a DOUBLE field);
+    the schema, NULLs included, is the one given."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+        rows = pa.table(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 def table_fingerprint(sf_dir: str, *names: str) -> str:
@@ -256,12 +270,6 @@ def table_fingerprint(sf_dir: str, *names: str) -> str:
     import hashlib
 
     return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register every table as a temp view so queries can use spark.sql."""
-    for name in names:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def read_csv(
@@ -351,7 +359,7 @@ def promote_staging(spark: SparkSession, staging_path: str, dim_path: str) -> No
     """
     stg = spark.read.parquet(staging_path)
     write_parquet(stg, dim_path, mode="append")
-    empty = spark.createDataFrame([], schema=stg.schema)
+    empty = local_frame(spark, [], stg.schema)
     write_parquet(empty, staging_path, mode="overwrite")
 
 

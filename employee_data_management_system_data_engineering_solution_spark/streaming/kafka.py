@@ -145,14 +145,6 @@ def parse_kafka_events(raw: DataFrame) -> DataFrame:
     )
 
 
-def events_from_kafka(
-    spark: SparkSession, bootstrap_servers: str, topic: str, **kwargs
-) -> DataFrame:
-    """The one-call production source: configured reader → load →
-    parse. Requires a reachable broker; see module docstring."""
-    return parse_kafka_events(kafka_reader(spark, bootstrap_servers, topic, **kwargs).load())
-
-
 #: Kafka's full wire schema, as ``readStream.format("kafka")`` delivers
 #: it. A file-backed replay dir written in this shape is plug-compatible
 #: with the broker source, so the composed topology below is testable
@@ -227,8 +219,9 @@ def run_strike_stream_from_wire(
             .start()
         )
         q.awaitTermination()
+        # resolved before the view is dropped: a local-relation scan of
+        # this run's sink, valid after the drop (see replay.run)
         out = spark.table(name)
-        out = spark.createDataFrame(out.collect(), schema=out.schema)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
         if q is not None:

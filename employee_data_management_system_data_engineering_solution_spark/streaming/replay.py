@@ -13,13 +13,19 @@ and guaranteed cleanup of the staging dir, stream query, temp view,
 and shuffle-partition conf.
 
 Cost anatomy (measured at sf0.1): staging (mkdtemp + symlink +
-sentinel write) is 0.03-0.14 s; essentially the whole per-carrier cost
-is the streaming query itself — planning, offset/commit logs, and one
-state-store commit cycle per partition per stateful operator per
-batch. Hence the levers that matter are state_partitions (default 4
-here; sized to key cardinality in production) and batch count, NOT
-staging reuse — a shared staging dir across carriers was measured and
-rejected as noise-level.
+sentinel write) is 0.03-0.14 s, and the streaming query itself —
+planning, offset/commit logs, and one state-store commit cycle per
+partition per stateful operator per batch — is most of the rest. The
+hand-over of the result is the one cost outside the stream, and it
+must stay off the Python path: rebuilding the sink rows with
+``createDataFrame(collect())`` plans a Python-RDD scan whose consumer
+forks Python workers to unpickle ~1.5k rows (1.8-2.3 s of
+strike_stream_stateful's 7.1-7.7 s, traced at sf0.1 on 4 shared
+cores, against 0.23 s for the sink's own relation, which ``run``
+returns). The streaming levers that matter are state_partitions
+(default 4 here; sized to key cardinality in production) and batch
+count, NOT staging reuse — a shared staging dir across carriers was
+measured and rejected as noise-level.
 """
 
 from __future__ import annotations
@@ -97,7 +103,7 @@ def replayed_events(
     view of ``{sf_dir}/events.parquet`` and ``run(result_df, name, output_mode)``
     executes the streaming plan through a memory sink (update mode by
     default; session-window aggregations require complete/append)
-    (availableNow trigger) and returns the sink table, materialized so
+    (availableNow trigger) and returns the sink's relation, resolved so
     it survives the cleanup that follows the ``with`` block.
 
     ``sentinel_batches``: optional extra micro-batches staged AFTER the
@@ -158,15 +164,16 @@ def replayed_events(
             queries.append(q)
             names.append(name)
             q.awaitTermination()
-            out = spark.table(name)
-            # DRIVER-BOUNDED collect: the memory sink already holds the
-            # result on the driver, and every carrier aggregates before
-            # sinking (per-key/window counts, <= a few thousand rows at
-            # any tested sf). The round-trip only detaches the frame
-            # from the temp view dropped below. Do NOT lift this into a
-            # production sink path — raw/unaggregated streams must go
-            # to a file/Kafka sink instead.
-            return spark.createDataFrame(out.collect(), schema=out.schema)
+            # the sink's own relation, resolved while the view exists:
+            # its plan holds this run's sink object, so the frame
+            # outlives the view dropped below and any later run that
+            # reuses the name, and Spark scans it as a local relation
+            # (no Python rows, no Python workers). DRIVER-BOUNDED: the
+            # sink holds the result on the driver; every carrier
+            # aggregates before sinking (<= a few thousand rows at any
+            # tested sf). Do NOT lift this into a production sink path
+            # — raw/unaggregated streams must go to a file/Kafka sink.
+            return spark.table(name)
 
         yield normalize_nanos(stream), run
     finally:

@@ -28,6 +28,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
+
 
 def _stage_batches(spark: SparkSession, sf_dir: str, stage_dir: str, n_batches: int) -> None:
     """Split events into n deterministic single-file micro-batches in
@@ -136,17 +138,17 @@ def run_upsert_stream(spark: SparkSession, sf_dir: str, n_batches: int = 2) -> D
         # empty replay: no batch ever fired, so no dim was written —
         # return the dim's schema with zero rows instead of failing
         # the read (mirrors a first-ever run over an empty topic)
-        return spark.createDataFrame(
-            [], "user_id LONG, n_events LONG, total_value DOUBLE"
-        )
+        return local_frame(spark, [], "user_id LONG, n_events LONG, total_value DOUBLE")
 
     out = spark.read.parquet(dim_dir).select(
         "user_id",
         "n_events",
         F.round("sum_value", 2).cast("double").alias("total_value"),
     )
-    # DRIVER-BOUNDED collect: the dim is one aggregated row per user
-    # (O(#users), ~150 rows at tested sf) and the round-trip detaches
-    # the result from dim_dir, which the next invocation deletes. A
-    # production caller reads the dim parquet directly instead.
-    return spark.createDataFrame(out.collect(), schema=out.schema)
+    # DRIVER-BOUNDED copy: the dim is one aggregated row per user
+    # (O(#users), ~150 rows at tested sf) and the copy detaches the
+    # result from dim_dir, which the next invocation deletes. It moves
+    # as Arrow into a JVM-scanned frame (``local_frame``), never as
+    # Python rows. A production caller reads the dim parquet directly
+    # instead.
+    return local_frame(spark, out.toArrow(), out.schema)

@@ -458,7 +458,6 @@ def test_prefix_filter_pairs_equals_brute_force(spark):
     Jaccard >= theta (no false negatives), verified against an
     all-pairs brute force over deterministic random token sets with
     deliberate near-dup plants and frequency ties."""
-    import itertools
     import random
 
     from employee_data_management_system_data_engineering_solution_spark.operators.dedup import (
@@ -477,17 +476,80 @@ def test_prefix_filter_pairs_equals_brute_force(spark):
     rows = [(i, t) for i, toks in sets.items() for t in toks]
     df = spark.createDataFrame(rows, "id LONG, tok STRING")
     for tn, td in ((2, 3), (4, 5), (1, 2)):
-        got = {
-            (r.id_a, r.id_b): (r.inter_size, r.union_size, r.jaccard)
-            for r in prefix_filter_pairs(df, "id", "tok", tn, td).collect()
-        }
-        want = {}
-        for a, b in itertools.combinations(sorted(sets), 2):
-            i = len(sets[a] & sets[b])
-            u = len(sets[a] | sets[b])
-            if td * i >= tn * u:
-                want[(a, b)] = (i, u, round(i / u, 4))
-        assert got == want, f"theta={tn}/{td}"
+        got = _ppjoin_got(prefix_filter_pairs(df, "id", "tok", tn, td))
+        assert got == _brute_jaccard_pairs(sets, tn, td), f"theta={tn}/{td}"
+
+
+def _brute_jaccard_pairs(sets, tn, td):
+    """All pairs with Jaccard >= tn/td, by the exact integer test."""
+    import itertools
+
+    want = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        i = len(sets[a] & sets[b])
+        u = len(sets[a] | sets[b])
+        if td * i >= tn * u:
+            want[(a, b)] = (i, u, round(i / u, 4))
+    return want
+
+
+def _random_token_sets(seed):
+    """Random token sets over a small vocabulary, plus a clone plant."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"t{i:02d}" for i in range(24)]
+    sets = {i: set(rng.sample(vocab, rng.randint(3, 10))) for i in range(30)}
+    sets[100] = set(sets[0])
+    return sets
+
+
+def _ppjoin_got(out):
+    return {
+        (r.id_a, r.id_b): (r.inter_size, r.union_size, r.jaccard)
+        for r in out.collect()
+    }
+
+
+def test_prefix_filter_pairs_null_token_keeps_hash_path(spark):
+    """A NULL token row belongs to no set, and it must not switch off
+    the xxhash64 path: xxhash64(NULL) = 42 is a non-NULL value that
+    countDistinct(token) never sees, so an unfiltered probe reads it
+    as a collision. Output equals brute force over the non-NULL
+    tokens, and the returned plan keys tokens by xxhash64."""
+    from employee_data_management_system_data_engineering_solution_spark.operators.dedup import (
+        prefix_filter_pairs,
+    )
+
+    sets = _random_token_sets(11)
+    rows = [(i, t) for i, toks in sets.items() for t in toks]
+    rows += [(0, None), (5, None), (999, None)]  # 999: a NULL-only doc
+    df = spark.createDataFrame(rows, "id LONG, tok STRING")
+    out = prefix_filter_pairs(df, "id", "tok", 2, 3)
+    assert "xxhash64" in out._jdf.queryExecution().optimizedPlan().toString()
+    assert _ppjoin_got(out) == _brute_jaccard_pairs(sets, 2, 3)
+
+
+def test_prefix_filter_pairs_string_fallback_on_hash_collision(spark, monkeypatch):
+    """Force the hash_ok=False fallback: with xxhash64 replaced by an
+    expression that collides on every token (all tokens share one
+    length), the injectivity probe fails and the operator must run
+    on the raw strings — exact against brute force. Had the colliding
+    ids been used, every pair would share all of its 'tokens'."""
+    from pyspark.sql import functions as F
+
+    from employee_data_management_system_data_engineering_solution_spark.operators.dedup import (
+        prefix_filter_pairs,
+    )
+
+    sets = _random_token_sets(13)
+    rows = [(i, t) for i, toks in sets.items() for t in toks]
+    df = spark.createDataFrame(rows, "id LONG, tok STRING")
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.length(cols[0]).cast("long"))
+    for tn, td in ((2, 3), (1, 2)):
+        out = prefix_filter_pairs(df, "id", "tok", tn, td)
+        assert "length(" not in out._jdf.queryExecution().optimizedPlan().toString()
+        assert _ppjoin_got(out) == _brute_jaccard_pairs(sets, tn, td), f"theta={tn}/{td}"
 
 
 def test_substring_span_report_matches_bruteforce_lcs(spark):

@@ -10,6 +10,8 @@ from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+    ARROW_BATCH_ROWS,
+    arrow_batch_defaults,
     latest_file,
     promote_staging,
     read_csv,
@@ -308,3 +310,24 @@ def test_fs_seam_degrades_for_jvmless_sessions(tmp_path, monkeypatch):
     assert fs.exists(str(tmp_path / "a.csv"), spark=FakeConnectSession())
     assert fs.list_dir("s3a://bucket/nope", spark=FakeConnectSession()) is None
     assert not fs.delete("s3a://bucket/nope", spark=FakeConnectSession())
+
+
+def test_arrow_batch_defaults_keeps_any_explicit_setting(spark):
+    """The engine default fills only an UNSET key; an explicit value is
+    kept, including one equal to Spark's own default of 10000."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        assert spark.conf.get(key, None) is None
+        arrow_batch_defaults(spark)
+        assert spark.conf.get(key) == str(ARROW_BATCH_ROWS)
+        spark.conf.set(key, "10000")
+        assert spark.conf.get(key, None) == "10000"
+        arrow_batch_defaults(spark)
+        assert spark.conf.get(key) == "10000"
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
