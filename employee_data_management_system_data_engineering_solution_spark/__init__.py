@@ -11,7 +11,16 @@ Import shorthand used throughout the repo::
     import employee_data_management_system_data_engineering_solution_spark as eds
 """
 
-from .session import get_session
-
 __all__ = ["get_session"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): importing the package must not import pyspark,
+    # because the Python daemon (``worker_daemon``) runs inside it and
+    # reorders ``sys.path`` before its first pyspark import.
+    if name == "get_session":
+        from .session import get_session
+
+        return get_session
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

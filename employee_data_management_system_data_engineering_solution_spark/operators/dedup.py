@@ -1098,6 +1098,14 @@ def prefix_filter_pairs(
     candidate pairs × ~200-token arrays dominated the whole plan's
     CPU (measured 59 s of the plan's 100 s at sf0.1).
 
+    The injectivity probe is an EAGER Spark job: it runs ``.first()``
+    when this function is called, before the returned plan executes,
+    and the plan then re-reads ``tokens``. So ``tokens`` must be
+    deterministic between the probe and execution (a table scan, or a
+    checkpointed frame); a nondeterministic input (``rand()``, a
+    sample, a source rewritten in between) may hold a token set the
+    probe never saw, and a hash collision in it would go undetected.
+
     Output: (id_a, id_b, inter_size, union_size, jaccard), id_a < id_b.
     """
     tid, tok = F.col(id_col), F.col(token_col)

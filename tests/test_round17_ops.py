@@ -88,18 +88,41 @@ def test_ann_assigned_concurrent_first_requests_build_once(spark, tmp_path):
         llm.clear_ann_eval_cache()
 
 
-def _n_cached_rdds(spark) -> int:
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+def _cached_rdd_ids(spark) -> set[int]:
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _memo_checkpoint_rdd_ids() -> set[int]:
+    """Ids of the RDDs that own the ANN memos' checkpoint blocks: a
+    ``localCheckpoint``'d frame's analyzed plan is the LogicalRDD that
+    owns them (see ``sources.io.unpersist_checkpoint``)."""
+    frames = [f for truth, un, mats in llm._ANN_EVAL_CACHE.values() for f in (truth, un, *mats)]
+    frames += [
+        entry[piece]
+        for entry in llm._ANN_INDEX_CACHE.values()
+        for piece in ("assigned", "codes", "truth")
+        if entry.get(piece) is not None
+    ]
+    ids = set()
+    for frame in frames:
+        plan = frame._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            ids.add(plan.rdd().id())
+    return ids
 
 
 def test_ann_eval_cache_clear_frees_method_checkpoint_blocks(spark, tmp_path):
     """clear_ann_eval_cache must free the per-method checkpoint BLOCKS
     (ADVICE r16: unpersisting only the union frees nothing — it owns no
     blocks; and r17 found Dataset.unpersist() itself never frees a
-    localCheckpoint's blocks, only the LogicalRDD handle does)."""
+    localCheckpoint's blocks, only the LogicalRDD handle does).
+
+    The assertions name the RDDs the memo itself pinned, not a count of
+    every cached RDD in the shared session: leftover checkpoints of
+    earlier tests are freed whenever a JVM GC runs, which moved that
+    count during the harness call."""
     _write_embeddings(spark, tmp_path, n=128)
     llm.clear_ann_eval_cache()
-    base = _n_cached_rdds(spark)
     try:
         truth, un = llm._ann_truth_and_ranked_methods(spark, str(tmp_path))
         (key,) = list(llm._ANN_EVAL_CACHE)
@@ -109,7 +132,8 @@ def test_ann_eval_cache_clear_frees_method_checkpoint_blocks(spark, tmp_path):
         assert len(mats) == 10  # the ten harness methods
         # the harness pinned real blocks: ten method frames + truth +
         # the index pieces
-        assert _n_cached_rdds(spark) >= base + 10
+        pinned = _memo_checkpoint_rdd_ids() & _cached_rdd_ids(spark)
+        assert len(pinned) >= 10
         # a second call reads the memoized (truth, union) pair back
         t2, u2 = llm._ann_truth_and_ranked_methods(spark, str(tmp_path))
         assert t2 is truth and u2 is un
@@ -118,7 +142,7 @@ def test_ann_eval_cache_clear_frees_method_checkpoint_blocks(spark, tmp_path):
     assert not llm._ANN_EVAL_CACHE and not llm._ANN_INDEX_CACHE
     # the clear dropped every pinned block deterministically — no
     # waiting on the JVM garbage collector
-    assert _n_cached_rdds(spark) <= base
+    assert not pinned & _cached_rdd_ids(spark)
 
 
 # ---------------------------------------------------------------------------

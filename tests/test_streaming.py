@@ -10,12 +10,15 @@ import os
 import shutil
 
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
     STRIKE_LIMIT,
     _coerce_state,
+    _fold_flagged_batch,
     _strike_state_fn,
     flag_messages,
     run_strike_stream,
@@ -162,6 +165,55 @@ def test_state_fn_matches_oracle_closed_form():
             continue
         row, _ = _run_state(pairs)
         assert row.strike_count == closed_form(nz), (counts, row.strike_count)
+
+
+def _fold_with_pandas_masks(pdf, strikes, month, timeless):
+    """The strike fold as it was written with per-group pandas masks:
+    the reference the list-pass fold must equal."""
+    flagged = pdf[pdf["flagged"].eq(True)]
+    timeless += int(flagged["month"].isna().sum())
+    flagged = flagged[flagged["month"].notna()]
+    for m in sorted(flagged["month"].unique()):
+        if m != month and strikes < STRIKE_LIMIT:
+            strikes = 0
+        month = max(month, m)
+        strikes += int((flagged["month"] == m).sum())
+    return strikes, month, timeless
+
+
+_MONTHS = ["2021-01", "2021-02", "2021-03", "2021-04"]
+_batch = st.lists(
+    st.tuples(
+        st.sampled_from([True, False, None]),
+        st.sampled_from(_MONTHS + [None, float("nan"), pd.NA]),
+    ),
+    max_size=25,
+)
+
+
+@given(
+    batches=st.lists(_batch, min_size=1, max_size=3),
+    state=st.tuples(
+        st.integers(0, 14), st.sampled_from([""] + _MONTHS), st.integers(0, 3)
+    ),
+    nullable_dtypes=st.booleans(),
+)
+@settings(max_examples=300, deadline=None)
+def test_fold_flagged_batch_equals_pandas_mask_fold(batches, state, nullable_dtypes):
+    """The list-pass fold equals the pandas-mask fold on batches with
+    NULL flags, every missing-month spelling, several months and
+    carried state, folded batch after batch."""
+    got = want = state
+    for rows in batches:
+        pdf = pd.DataFrame(
+            {"flagged": [f for f, _ in rows], "month": [m for _, m in rows]},
+            dtype=object,
+        )
+        if nullable_dtypes:  # Arrow-style frames: pd.NA in both columns
+            pdf = pdf.astype({"flagged": "boolean", "month": "string"})
+        got = _fold_flagged_batch(pdf, *got)
+        want = _fold_with_pandas_masks(pdf, *want)
+        assert got == want, (rows, state)
 
 
 def test_run_strike_stream_matches_state_semantics(spark, tmp_path):
